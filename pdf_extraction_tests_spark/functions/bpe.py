@@ -17,7 +17,7 @@ tokens.  This module supplies a real, dependency-free BPE:
   distinct word.
 * :func:`token_count_col` — the Spark integration point: a column
   expression (whitespace mode, codegen'd, DuckDB-oracle-able) or an
-  Arrow-batched ``pandas_udf`` (bpe mode, pytest-pinned against the local
+  Arrow-batched pandas UDF (bpe mode, pytest-pinned against the local
   implementation — never a row-at-a-time Python UDF).
 
 Pre-tokenization matches q31's subword-piece regex (runs of alphanumerics,
@@ -32,6 +32,8 @@ from functools import lru_cache
 
 import pandas as pd
 from pyspark.sql import Column, functions as F
+
+from .. import boundary
 
 _WORD_RE = re.compile(r"[a-zA-Z0-9]+|[^a-zA-Z0-9\s]")
 
@@ -325,7 +327,7 @@ def token_count_col(text_col: str, tokenizer: str = "whitespace",
     """Token-count column under the chosen tokenizer.
 
     ``whitespace``: codegen'd split/size — exactly the q45/q49 legacy
-    semantics and DuckDB-oracle-able.  ``bpe``: Arrow-batched pandas_udf
+    semantics and DuckDB-oracle-able.  ``bpe``: Arrow-batched pandas UDF
     (per-word cache amortizes repeated vocabulary across a batch; pytest
     pins Spark == local); ``merges`` selects the table — None keeps the
     frozen seed default, a corpus-learned table from
@@ -339,12 +341,9 @@ def token_count_col(text_col: str, tokenizer: str = "whitespace",
         return F.size(F.split(F.trim(F.col(text_col)), r"\s+")).cast("long")
     if tokenizer != "bpe":
         raise ValueError(f"unknown tokenizer {tokenizer!r}")
-    from pyspark.sql.functions import pandas_udf
-
     tok = _DEFAULT_TOKENIZER if merges is None else BpeTokenizer(merges)
 
-    @pandas_udf("long")
     def _count(texts: pd.Series) -> pd.Series:
         return texts.map(tok.token_count).astype("int64")
 
-    return _count(F.col(text_col))
+    return boundary.pandas_column(_count, "long", F.col(text_col))

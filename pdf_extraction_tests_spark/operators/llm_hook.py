@@ -19,6 +19,7 @@ from typing import Callable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from .. import boundary
 from ..functions.llm_json import parse_llm_response
 
 ANALYZED_FIELDS = [
@@ -33,7 +34,6 @@ def build_prompt(spans: list) -> str:
     blocks and ask for structural indices."""
     lines = []
     for i, sp in enumerate(spans[:12]):
-        sp = sp if isinstance(sp, dict) else sp.asDict()
         if sp.get("kind") in ("title", "text"):
             lines.append(f"[{i + 1}] {str(sp.get('text') or '')[:200]}")
     return (
@@ -57,10 +57,7 @@ def llm_structure_stage(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            prompts = [
-                build_prompt(list(s) if s is not None else [])
-                for s in pdf["spans"]
-            ]
+            prompts = [build_prompt(s) for s in pdf["spans"]]
             replies = chat_fn(prompts)
             yield pd.DataFrame(
                 {
@@ -69,10 +66,8 @@ def llm_structure_stage(
                 }
             )
 
-    from ..shipping import ship_package
-
-    ship_package(extracted.sparkSession)
-    analyzed = extracted.select("doc_id", "spans").mapInPandas(run, schema=out_schema)
+    analyzed = boundary.map_in_pandas(extracted.select("doc_id", "spans"), run,
+                                      out_schema)
     return extracted.join(analyzed, "doc_id", "left")
 
 

@@ -19,6 +19,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from .. import boundary
+
 
 def _dot(va, vb):
     return F.aggregate(
@@ -67,7 +69,6 @@ def with_lsh_bucket(emb: DataFrame, planes: np.ndarray,
     Vectorized pandas UDF (one matrix multiply per Arrow batch)."""
     planes_b = planes  # captured by value in the closure; small (bits x dim)
 
-    @F.pandas_udf(T.IntegerType())
     def bucket_of(vs: pd.Series) -> pd.Series:
         if len(vs) == 0:
             return pd.Series([], dtype="int32")
@@ -76,7 +77,8 @@ def with_lsh_bucket(emb: DataFrame, planes: np.ndarray,
         weights = (1 << np.arange(planes_b.shape[0])).astype(np.int64)
         return pd.Series((signs @ weights).astype("int32"))
 
-    return emb.withColumn("bucket", bucket_of(F.col(vec_col)))
+    return emb.withColumn("bucket", boundary.pandas_column(
+        bucket_of, T.IntegerType(), F.col(vec_col)))
 
 
 def lsh_bucket_expr(planes: np.ndarray, vec_col: str = "embedding"):
@@ -195,7 +197,6 @@ def with_ivf_list(emb: DataFrame, centroids: np.ndarray,
     probe is a partition-pruned scan of n_probe lists."""
     cents = centroids
 
-    @F.pandas_udf(T.IntegerType())
     def list_of(vs: pd.Series) -> pd.Series:
         if len(vs) == 0:
             return pd.Series([], dtype="int32")
@@ -203,7 +204,8 @@ def with_ivf_list(emb: DataFrame, centroids: np.ndarray,
         d = ((mat[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
         return pd.Series(d.argmin(axis=1).astype("int32"))
 
-    return emb.withColumn("ivf_list", list_of(F.col(vec_col)))
+    return emb.withColumn("ivf_list", boundary.pandas_column(
+        list_of, T.IntegerType(), F.col(vec_col)))
 
 
 def ivf_topk(emb: DataFrame, query_vec: list[float], k: int = 10,

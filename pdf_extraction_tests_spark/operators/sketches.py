@@ -20,7 +20,9 @@ from __future__ import annotations
 
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
+
+from .. import boundary
 
 from .dedup import _h48_duck, h48, shingles_sql, with_shingles
 
@@ -205,11 +207,10 @@ def heavy_hitters(docs: DataFrame, k: int = 20, shingle_n: int = 3,
             .limit(k)
         )
     sketch = cms_build(docs, shingle_n, depth, width, text_col, id_col)
-    cand = (
-        sh.select("shingle")
-        .mapInPandas(_local_top_shingles(local_m or 8 * k), "shingle string")
-        .distinct()
-    )
+    cand = boundary.map_in_pandas(
+        sh.select("shingle"), _local_top_shingles(local_m or 8 * k),
+        T.StructType([T.StructField("shingle", T.StringType())]),
+    ).distinct()
     pruned = (
         cms_estimate(sketch, cand)
         .orderBy(F.desc("est"), F.asc("shingle"))

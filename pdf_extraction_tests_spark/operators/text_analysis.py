@@ -1,21 +1,24 @@
 """Text-analysis operators: language-ID, quality scoring, token counting,
 document fingerprinting.
 
-All pure column expressions (whole-stage codegen; zero UDFs, zero shuffles
-beyond any final aggregation the caller adds) with exact DuckDB oracles.
+Pure column expressions (whole-stage codegen; zero shuffles beyond any
+final aggregation the caller adds) except language-ID, which is one
+Arrow-batched pandas UDF; every operator has an exact DuckDB oracle.
 """
 
 from __future__ import annotations
 
-import pandas as pd  # module-level: pandas_udf resolves pd.Series hints here
+import pandas as pd  # module-level: pandas UDF type hints resolve pd.Series here
 
-from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql import DataFrame, functions as F
+
+from .. import boundary
 
 # ---------------------------------------------------------------------------
-# Language ID - three signal tiers, all exact integer column arithmetic on
-# BOTH engines (counts via length-replace; no floats, so cross-engine ties
-# are bit-identical):
+# Language ID - three signal tiers, all exact integer arithmetic on BOTH
+# engines (literal occurrence counts: length-replace in DuckDB, pyarrow
+# count_substring in Spark; no floats, so cross-engine ties are
+# bit-identical):
 #
 #   1. Latin-script languages: DISCRIMINATIVE char-trigram profiles
 #      (Cavnar & Trenkle 1994 shape) learned at import from frozen
@@ -406,89 +409,34 @@ LANGUAGES: list[str] = list(LANG_TRIGRAMS) + list(_SCRIPT_RANGES)
 _LID_THRESHOLD3 = 6  # thirds-of-a-hit units: < 2 whole hits -> 'und'
 
 
-def _lid_scores3(p: Column) -> dict[str, Column]:
-    """Per-language integer scores (thirds-of-a-hit units) over the padded
-    lowered text column ``p`` - pure length/replace arithmetic.
-
-    The trigram sum folds over an ARRAY of literals with one shared
-    length-replace lambda (``F.aggregate``) instead of inlining ~500
-    replace() terms: value-identical (same per-trigram length deltas,
-    integer addition), but the expression tree stays small enough that
-    Catalyst analysis + codegen take milliseconds - the inlined form hit
-    janino's method limits and cost ~13 s of plan compilation per query.
-    """
-    def occ_len(lit: Column | str) -> Column:  # occurrences * len(lit)
-        lit = F.lit(lit) if isinstance(lit, str) else lit
-        return F.length(p) - F.length(F.replace(p, lit, F.lit("")))
-
-    scores: dict[str, Column] = {}
-    for lang, tris in LANG_TRIGRAMS.items():
-        s = F.aggregate(
-            F.array(*[F.lit(t) for t in tris]),
-            F.lit(0),
-            lambda acc, t: acc + occ_len(t),
-        )
-        for c in _MARKER_CHARS.get(lang, ""):
-            s = s + F.lit(3 * _MARKER_WEIGHT) * occ_len(c)
-        scores[lang] = s
-    for lang, cls in _SCRIPT_RANGES.items():
-        n = F.length(p) - F.length(F.regexp_replace(p, f"[{cls}]", ""))
-        scores[lang] = n * F.lit(3 * _SCRIPT_WEIGHT.get(lang, 1))
-    return scores
-
-
-def with_language_guess_expr(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """All-JVM expression form of the classifier (the shape the DuckDB
-    oracle mirrors).  Kept as the semantic reference: equivalence with the
-    Arrow kernel below is pinned by
-    tests/test_langid.py::test_arrow_kernel_matches_expression_path."""
-    padded = F.concat(F.lit(" "), F.lower(F.col(text_col)), F.lit(" "))
-    scores = _lid_scores3(padded)
-    # materialize scores as named columns so the 18-way argmax below
-    # references shared subtrees (codegen CSE) instead of re-expanding
-    # ~500 replace() terms per comparison
-    scored = docs.withColumns({f"_s_{lg}": e for lg, e in scores.items()})
-    best = F.greatest(*[F.col(f"_s_{lg}") for lg in scores])
-    guess = F.lit("und")
-    # deterministic priority on ties: _LANG_SEEDS then _SCRIPT_RANGES order
-    for lang in reversed(list(scores)):
-        guess = F.when(F.col(f"_s_{lang}") == best, F.lit(lang)).otherwise(guess)
-    return scored.withColumn(
-        "lang_guess",
-        F.when(best >= _LID_THRESHOLD3, guess).otherwise(F.lit("und")),
-    ).drop(*[f"_s_{lg}" for lg in scores])
-
-
 def _lid_guess_frame(padded: pd.Series) -> pd.Series:
-    """Vectorized replica of the JVM scoring over one Arrow batch.
+    """Vectorized replica of the DuckDB oracle's scoring
+    (:func:`language_guess_sql`) over one Arrow batch.
 
-    Exactness argument, term by term (the guess must match the expression
-    path bit-for-bit — ties and the >= 6 threshold are live on real data):
+    Exactness argument, term by term (the guess must match the oracle
+    bit-for-bit — ties and the >= 6 threshold are live on real data):
 
     * ``pc.count_substring`` counts NON-overlapping left-to-right literal
       occurrences — the same value ``(length(p) - length(replace(p, t, '')))
-      / len(t)`` reads off the JVM's UTF8String.replace (verified:
-      'aaaa'/'aa' -> 2 on both);
+      / len(t)`` reads off a replace (verified: 'aaaa'/'aa' -> 2 on both);
     * trigram/marker contributions are integer ``count * len(lit)`` /
       ``count * 3 * weight`` — pure int arithmetic, no floats anywhere;
     * script scores use ``pc.count_substring_regex('[<ranges>]')`` — each
-      match is a single char, so the count equals the JVM's
+      match is a single char, so the count equals the oracle's
       ``length - length(regexp_replace(p, '[cls]', ''))`` (the literal
-      codepoint ranges parse identically in Java regex and RE2, already a
-      load-bearing assumption of the DuckDB oracle);
+      codepoint ranges parse identically in RE2 on both sides);
     * lowering/padding stays in the JVM (the caller passes
       ``' ' || lower(text) || ' '``), so JVM-vs-Python case-mapping
       differences cannot arise;
     * NULL text -> NULL padded -> scored as '' here -> best=0 < threshold
-      -> 'und', identical to the expression path's NULL-condition fall-
-      through to the otherwise('und') branch.
+      -> 'und', identical to the oracle's ELSE 'und' branch.
     """
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
     # large_string: 64-bit offsets — a plain pa.string() caps one batch's
-    # total text at 2 GiB, a limit the all-JVM path never had
+    # total text at 2 GiB
     arr = pa.array(padded.fillna(""), type=pa.large_string())
     n = len(arr)
 
@@ -512,48 +460,28 @@ def _lid_guess_frame(padded: pd.Series) -> pd.Series:
     best = np.maximum.reduce(list(scores.values()))
     guess = np.full(n, "und", dtype=object)
     # first language in dict order with score == best wins (same tie
-    # priority as the reversed when-chain in the expression path)
+    # priority as the oracle's CASE order)
     for lang in reversed(list(scores)):
         guess = np.where(scores[lang] == best, lang, guess)
     guess = np.where(best >= _LID_THRESHOLD3, guess, "und")
     return pd.Series(guess, dtype=object)
 
 
-_LID_UDF = None
-
-
-def _lid_guess_udf():
-    """Lazily-built pandas_udf (module-level @pandas_udf would parse the
-    DDL return type at import, which needs an active SparkContext)."""
-    global _LID_UDF
-    if _LID_UDF is None:
-        _LID_UDF = pandas_udf(_lid_guess_frame, "string")
-    return _LID_UDF
-
-
 def with_language_guess(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Language-ID via the Arrow-vectorized kernel (round-7, guide §4.2).
 
-    The expression path evaluates ~500 ``length(replace(p, t, ''))`` terms
+    The expression form evaluates ~500 ``length(replace(p, t, ''))`` terms
     per row, each a full scan PLUS an allocation of the replaced string —
     measured 16 s for q29 at sf0.1.  This form ships the padded-lowered
     text across the Arrow boundary once and counts every literal with
     pyarrow's C++ ``count_substring`` kernels (no allocation, one batch
     column pass per literal): 16.1 s -> ~2 s.  Scan-side, zero shuffle, no
     per-row Python — the heavy loop is 500 vectorized kernel calls per
-    batch.  Guess values are bit-identical to the expression path
-    (equivalence pinned in tests/test_langid.py; the DuckDB oracle mirrors
-    the expression path as before)."""
-    # the udf is pickled BY REFERENCE to this module (unlike bpe's
-    # closure-local udf), so executors must be able to import the package —
-    # ship it like every pipeline operator does (memoized per context;
-    # found by the round-7 4x-scale probe: a session that had never run an
-    # extraction had no package on the workers and q29/q59 crashed)
-    from ..shipping import ship_package
-
-    ship_package(docs.sparkSession)
+    batch.  Guess values are bit-identical to the DuckDB oracle
+    :func:`language_guess_sql` (pinned in tests/test_langid.py)."""
     padded = F.concat(F.lit(" "), F.lower(F.col(text_col)), F.lit(" "))
-    return docs.withColumn("lang_guess", _lid_guess_udf()(padded))
+    return docs.withColumn("lang_guess", boundary.pandas_column(
+        _lid_guess_frame, "string", padded))
 
 
 def language_guess_sql(table: str = "documents") -> str:

@@ -7,20 +7,25 @@ Design (SURVEY.md §3.4 / §4 custom items):
   scan — the only exchange is an explicit *salted repartition* on
   ``part_key = pmod(xxhash64(doc_id), P)`` for load balance and stable
   checkpoint identity.
-* **Skew routing.** Documents whose total span bytes exceed a threshold are
-  routed to a chunked path: spans are ``posexplode``-ed into fixed-size
-  chunks, parsed chunk-parallel with ``applyInPandas`` (the expensive stage —
-  in production this is where PDF bytes are rasterized/OCR'd), then
-  re-assembled per document for the cheap doc-global layout/boundary logic.
-  The reference OOMs silently on big docs (eager per-page loop,
+* **Skew routing.** Documents whose total span characters exceed a
+  threshold are routed to a chunked path: each span array is sliced into
+  chunk rows on a running character budget, the chunks are spread and
+  parsed chunk-parallel (the expensive stage — in production this is where
+  PDF bytes are rasterized/OCR'd), then regions are re-assembled per
+  document with ``applyInPandas`` for the cheap doc-global layout/boundary
+  logic.  The reference OOMs silently on big docs (eager per-page loop,
   Document_Processor_DocLayout_YOLO_Code_v10.R:32-191); the north rule makes
   sub-batching mandatory.
 * **Lineage / resume.** Every run appends one row per ``part_key`` to a
   checkpoint table; a restart anti-joins input partitions against completed
   rows and re-processes only the remainder — batch incrementality standing in
   for the reference's "skip if .RData exists" idiom (v10.R:3712-3723).
-* **No per-row Python.** Only Arrow-vectorized ``mapInPandas`` /
-  ``applyInPandas``; everything else is native column expressions.
+* **One Python boundary.** Every Python stage here goes through
+  :mod:`.boundary`, which ships the package to the workers and carries the
+  ``spans`` column across flat (one array per struct field) in both
+  directions; stage functions see the kernel's list-of-dict records.  No
+  per-row Python: everything outside those Arrow-batched stages is native
+  column expressions.
 """
 
 from __future__ import annotations
@@ -32,8 +37,8 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from . import extract_core as ec
-from .schema import CHECKPOINT, DOCS, EXTRACTED_WITH_PART, REGIONS
+from . import boundary, extract_core as ec
+from .schema import CHECKPOINT, DOCS, EXTRACTED_WITH_PART, LAYOUT, REGIONS
 from .tables import read_table, write_table
 
 # part_key cardinality: the checkpoint/resume granularity.  Deliberately
@@ -108,134 +113,24 @@ def estimate_scan_partitions(docs: DataFrame) -> int:
     return -(-total // max(max_bytes, 1))  # ceil
 
 
-def _spans_to_records(spans) -> list[dict]:
-    """Normalize an Arrow-materialized spans array to list-of-dicts."""
-    if spans is None:
-        return []
-    out = []
-    for sp in spans:
-        if isinstance(sp, dict):
-            out.append(sp)
-        else:  # pyspark Row
-            out.append(sp.asDict())
-    return out
-
-
 # ---------------------------------------------------------------------------
 # normal path: one mapInPandas stage, zero extra shuffles
 # ---------------------------------------------------------------------------
 
 
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _extract_frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         if pdf.empty:
             continue
-        norm = pdf.assign(spans=pdf["spans"].map(_spans_to_records))
-        out = ec.extract_docs_frame(norm[["doc_id", "spans"]])
+        out = ec.extract_docs_frame(pdf)
         out["part_key"] = pdf["part_key"].to_numpy()
         yield out
-
-
-# Flat-boundary crossing (round-7, guide §4): the JVM's ArrowWriter
-# serializes an array<struct<4 fields>> column element-by-element, and that
-# conversion — not Python-side work — dominated the mapInPandas round trip
-# (measured: an identity pass over the bench corpus cost 3.2-5.1 s even
-# with zero Python object construction; projecting the same spans as four
-# parallel primitive arrays cut the identity pass ~15%).  So the hot path
-# crosses flat in BOTH directions: spans.kind/.text/.media_ref/.offset out
-# to Python (a free JVM field extraction), dict records rebuilt per batch
-# (cheap — measured inside the same probe), and result spans returned as
-# four arrays re-zipped to the public struct schema JVM-side.  The kernel
-# and the public EXTRACTED_WITH_PART schema are untouched.
-
-_EXTRACT_FLAT_COLS = ["_kinds", "_texts", "_refs", "_orders"]
-
-_EXTRACT_FLAT_OUT = T.StructType(
-    [f for f in EXTRACTED_WITH_PART.fields if f.name != "spans"]
-    + [
-        T.StructField("_kinds", T.ArrayType(T.StringType()), True),
-        T.StructField("_texts", T.ArrayType(T.StringType()), True),
-        T.StructField("_refs", T.ArrayType(T.StringType()), True),
-        T.StructField("_orders", T.ArrayType(T.IntegerType()), True),
-    ]
-)
-
-_FLAT_OUT_NAMES = [f.name for f in _EXTRACT_FLAT_OUT.fields]
-
-
-def _records_from_flat(pdf: pd.DataFrame) -> list[list[dict]]:
-    """Rebuild the kernel's span-record dicts from the four parallel input
-    arrays.  NULL spans arrays (doc with spans=NULL) come through as None
-    in every column -> empty record list, matching _spans_to_records."""
-    return [
-        [
-            {"kind": k, "text": t, "media_ref": m, "offset": o}
-            for k, t, m, o in zip(ks, ts, ms, os_)
-        ]
-        if ks is not None else []
-        for ks, ts, ms, os_ in zip(
-            pdf["_kinds"], pdf["_texts"], pdf["_refs"], pdf["_orders"])
-    ]
-
-
-def _extract_batches_flat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        if pdf.empty:
-            continue
-        frame = pd.DataFrame(
-            {"doc_id": pdf["doc_id"], "spans": _records_from_flat(pdf)})
-        out = ec.extract_docs_frame(frame)
-        spans = out["spans"]
-        out = out.drop(columns=["spans"])
-        out["part_key"] = pdf["part_key"].to_numpy()
-        out["_kinds"] = spans.map(lambda sp: [s["kind"] for s in sp])
-        out["_texts"] = spans.map(lambda sp: [s["text"] for s in sp])
-        out["_refs"] = spans.map(lambda sp: [s["media_ref"] for s in sp])
-        out["_orders"] = spans.map(lambda sp: [s["order"] for s in sp])
-        yield out[_FLAT_OUT_NAMES]
 
 
 def extract_direct(docs: DataFrame) -> DataFrame:
-    """docs(doc_id, spans, part_key) -> extracted, one Arrow stage.
-
-    Crosses the Python boundary flat (see note above) and re-zips the
-    span struct JVM-side so callers see the unchanged EXTRACTED_WITH_PART
-    schema."""
-    raw = _flat_spans_input(docs, "part_key").mapInPandas(
-        _extract_batches_flat, schema=_EXTRACT_FLAT_OUT)
-    spans = F.transform(
-        F.arrays_zip("_kinds", "_texts", "_refs", "_orders"),
-        lambda x: F.struct(
-            x["_kinds"].alias("kind"),
-            x["_texts"].alias("text"),
-            x["_refs"].alias("media_ref"),
-            x["_orders"].alias("order"),
-        ),
-    )
-    return raw.withColumn("spans", spans).select(
-        *[f.name for f in EXTRACTED_WITH_PART.fields])
-
-
-def _flat_spans_input(docs: DataFrame, *extra_cols: str) -> DataFrame:
-    """Project the spans struct array into four parallel arrays for a flat
-    boundary crossing (see the note above extract_direct)."""
-    return docs.select(
-        "doc_id", *extra_cols,
-        F.col("spans.kind").alias("_kinds"),
-        F.col("spans.text").alias("_texts"),
-        F.col("spans.media_ref").alias("_refs"),
-        F.col("spans.offset").alias("_orders"),
-    )
-
-
-def _extract_simple_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        if pdf.empty:
-            continue
-        norm = pdf.assign(spans=pdf["spans"].map(_spans_to_records))
-        out = ec.extract_simple_frame(norm[["doc_id", "spans"]])
-        out["part_key"] = pdf["part_key"].to_numpy()
-        yield out
+    """docs(doc_id, spans, part_key) -> extracted, one Arrow stage.  Every
+    input column crosses the boundary; extract_docs passes just these."""
+    return boundary.map_in_pandas(docs, _extract_frames, EXTRACTED_WITH_PART)
 
 
 DUAL_SCHEMA = T.StructType(
@@ -249,55 +144,28 @@ DUAL_SCHEMA = T.StructType(
 )
 
 
-def _extract_dual_batches_flat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _extract_dual_frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         if pdf.empty:
             continue
-        frame = pd.DataFrame(
-            {"doc_id": pdf["doc_id"], "spans": _records_from_flat(pdf)})
-        yield ec.extract_dual_frame(frame)
+        yield ec.extract_dual_frame(pdf)
 
 
-def extract_docs_dual(docs: DataFrame,
-                      num_parts: int = DEFAULT_NUM_PARTS) -> DataFrame:
+def extract_docs_dual(docs: DataFrame) -> DataFrame:
     """Cross-extractor differential in ONE pass (v8.R:3017-3033): the smart
     and simple kernels run over the same parsed regions inside one
     mapInPandas stage — one corpus scan, zero joins/shuffles.  The round-2
     form (two full pipelines + equi-join) parsed every document twice and
     shuffled both outputs; at 100 TB the single-pass form is the only
-    sensible shape for a per-doc differential.  Crosses the boundary flat
-    (round 7 — only the input side here; the output is five scalars).
-
-    ``num_parts`` is accepted for call-shape stability but unused since
-    the flat crossing: the dual QA relation follows the scan partitioning
-    (no part_key column crosses the boundary any more)."""
-    del num_parts
-    from .shipping import ship_package
-
-    ship_package(docs.sparkSession)
-    return _flat_spans_input(docs).mapInPandas(
-        _extract_dual_batches_flat, schema=DUAL_SCHEMA)
-
-
-def extract_docs_simple(docs: DataFrame,
-                        num_parts: int = DEFAULT_NUM_PARTS) -> DataFrame:
-    """SIMPLE-path extraction — the reference's second extractor
-    (process_document_simple, v10.R:745-811) distributed the same way as
-    the smart path.  Used for the cross-extractor differential
-    (v8.R:3017-3033); a QA relation typically run on samples, so it takes
-    the direct mapInPandas route without the oversized-doc chunking."""
-    from .shipping import ship_package
-
-    ship_package(docs.sparkSession)
-    if "part_key" not in docs.columns:
-        docs = with_part_key(docs, num_parts)
-    return docs.mapInPandas(_extract_simple_batches, schema=EXTRACTED_WITH_PART)
+    sensible shape for a per-doc differential.  The QA relation follows
+    the scan partitioning."""
+    return boundary.map_in_pandas(docs.select("doc_id", "spans"),
+                                  _extract_dual_frames, DUAL_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
 # skew path: chunk-parallel parse, then per-doc assemble
 # ---------------------------------------------------------------------------
-
 
 
 def _split_chunk_rows(batches: Iterator[pd.DataFrame],
@@ -307,7 +175,6 @@ def _split_chunk_rows(batches: Iterator[pd.DataFrame],
     for pdf in batches:
         rows = []
         for doc_id, part_key, spans in zip(pdf["doc_id"], pdf["part_key"], pdf["spans"]):
-            spans = _spans_to_records(spans)
             cur: list[dict] = []
             cum = 0
             chunk = 0
@@ -329,7 +196,7 @@ def _parse_chunk_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]
     for pdf in batches:
         frames = []
         for doc_id, part_key, spans in zip(pdf["doc_id"], pdf["part_key"], pdf["spans"]):
-            recs = ec.spans_to_regions(_spans_to_records(spans))
+            recs = ec.spans_to_regions(spans)
             if not recs:
                 continue
             f = pd.DataFrame(recs, columns=ec.REGION_COLUMNS)
@@ -358,7 +225,7 @@ def extract_chunked(docs: DataFrame, chunk_spans: int = DEFAULT_CHUNK_SPANS,
     split into many parse units (north_star: "multi-MB spans split into
     sub-batches before the Arrow UDF"); ``chunk_spans`` remains a secondary
     cap for many-tiny-span docs.  The slicing happens in a narrow
-    mapInPandas over the nested array (no per-span explode — exploding
+    mapInPandas over the span array (no per-span explode — exploding
     multi-MB docs into one shuffle row per span cost more than the parse);
     the only shuffles are the chunk spread and the per-doc reassembly,
     both proportional to the (few) huge docs.
@@ -371,15 +238,13 @@ def extract_chunked(docs: DataFrame, chunk_spans: int = DEFAULT_CHUNK_SPANS,
             T.StructField("spans", DOCS["spans"].dataType, True),
         ]
     )
-    chunk_rows = docs.select("doc_id", "part_key", "spans").mapInPandas(
-        lambda it: _split_chunk_rows(it, chunk_spans, chunk_chars),
-        schema=chunk_schema,
-    )
+    chunk_rows = boundary.map_in_pandas(
+        docs, lambda it: _split_chunk_rows(it, chunk_spans, chunk_chars),
+        chunk_schema)
     spread = chunk_rows.repartition("doc_id", "chunk")
-    regions = spread.mapInPandas(_parse_chunk_rows, schema=REGIONS)
-    return regions.groupBy("doc_id").applyInPandas(
-        lambda pdf: _assemble_doc(pdf), schema=EXTRACTED_WITH_PART
-    )
+    regions = boundary.map_in_pandas(spread, _parse_chunk_rows, REGIONS)
+    return boundary.apply_in_pandas(regions, ["doc_id"], _assemble_doc,
+                                    EXTRACTED_WITH_PART)
 
 
 DEBUG_BOUNDARY_SCHEMA = T.StructType(
@@ -404,22 +269,19 @@ def debug_boundaries(docs: DataFrame, context: int = 3) -> DataFrame:
     per document, the rows within ``context`` of each extraction boundary
     with an in-slice flag — boundary regressions become visible in DATA.
     One mapInPandas stage over the corpus scan, no shuffle."""
-    from .shipping import ship_package
-
-    ship_package(docs.sparkSession)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [f.name for f in DEBUG_BOUNDARY_SCHEMA.fields]
         for pdf in batches:
             rows: list[dict] = []
-            for doc_id, spans in zip(pdf["doc_id"], _records_from_flat(pdf)):
+            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
                 recs = ec.spans_to_regions(spans)
                 rows.extend(ec.boundary_debug_records(doc_id, recs, context))
             yield (pd.DataFrame(rows, columns=cols) if rows
                    else pd.DataFrame(columns=cols))
 
-    return _flat_spans_input(docs).mapInPandas(
-        run, schema=DEBUG_BOUNDARY_SCHEMA)
+    return boundary.map_in_pandas(docs.select("doc_id", "spans"), run,
+                                  DEBUG_BOUNDARY_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -434,16 +296,12 @@ def extract_layout(docs: DataFrame) -> DataFrame:
     197-202): ALL parsed blocks, including 'abandon' and parse failures,
     before any extraction filter — the debugging/audit relation.
     """
-    from .schema import LAYOUT
-    from .shipping import ship_package
-
-    ship_package(docs.sparkSession)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [f.name for f in LAYOUT.fields]
         for pdf in batches:
             frames = []
-            for doc_id, spans in zip(pdf["doc_id"], _records_from_flat(pdf)):
+            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
                 recs = ec.spans_to_regions(spans)
                 if not recs:
                     continue
@@ -456,7 +314,7 @@ def extract_layout(docs: DataFrame) -> DataFrame:
                 else pd.DataFrame(columns=cols)
             )
 
-    return _flat_spans_input(docs).mapInPandas(run, schema=LAYOUT)
+    return boundary.map_in_pandas(docs.select("doc_id", "spans"), run, LAYOUT)
 
 
 # ---------------------------------------------------------------------------
@@ -484,11 +342,9 @@ def extract_docs(
     repartition happens BEFORE size computation and routing so every
     downstream stage runs at full parallelism.
     """
-    from .shipping import ship_package
-
-    ship_package(docs.sparkSession)
     if "part_key" not in docs.columns:
         docs = with_part_key(docs, num_parts)
+    docs = docs.select("doc_id", "part_key", "spans")
     if repartition is None:
         parallelism = docs.sparkSession.sparkContext.defaultParallelism
         repartition = estimate_scan_partitions(docs) < 2 * parallelism
@@ -498,20 +354,17 @@ def extract_docs(
         # comes from spark.sql.shuffle.partitions (AQE may coalesce), so the
         # same job re-balances automatically at any cluster size
         docs = docs.repartition("part_key")
-    sized = docs.withColumn(
-        "_total_chars",
-        F.coalesce(  # NULL spans => 0, so the doc still routes (and emits an
-            # empty extraction) instead of silently vanishing from both paths
-            F.aggregate(
-                F.col("spans"),
-                F.lit(0).cast("long"),
-                lambda acc, s: acc + F.coalesce(F.length(s["text"]), F.lit(0)),
-            ),
+    total_chars = F.coalesce(  # NULL spans => 0, so the doc still routes (and
+        # emits an empty extraction) instead of silently vanishing from both paths
+        F.aggregate(
+            F.col("spans"),
             F.lit(0).cast("long"),
+            lambda acc, s: acc + F.coalesce(F.length(s["text"]), F.lit(0)),
         ),
+        F.lit(0).cast("long"),
     )
-    small = sized.filter(F.col("_total_chars") <= oversize_chars).drop("_total_chars")
-    big = sized.filter(F.col("_total_chars") > oversize_chars).drop("_total_chars")
+    small = docs.filter(total_chars <= oversize_chars)
+    big = docs.filter(total_chars > oversize_chars)
     small_out = extract_direct(small)  # filter preserves the partitioning
     big_out = extract_chunked(big, chunk_spans, chunk_chars)
     return small_out.unionByName(big_out)

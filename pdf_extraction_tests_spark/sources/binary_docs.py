@@ -27,6 +27,7 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import boundary
 from ..schema import DOCS
 
 SPDF_MAGIC = b"SPDF\n"
@@ -166,10 +167,7 @@ def read_binary_docs(spark: SparkSession, path: str,
                 }
             )
 
-    from ..shipping import ship_package
-
-    ship_package(spark)
-    return raw.mapInPandas(parse, schema=DOCS)
+    return boundary.map_in_pandas(raw, parse, DOCS)
 
 
 def write_spdf(path: str, regions: list[str]) -> None:

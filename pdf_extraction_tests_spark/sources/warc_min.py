@@ -41,6 +41,7 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import boundary
 from ..schema import DOCS
 
 _MAX_BLOB = 1 << 28           # 256 MiB decompressed ceiling per blob
@@ -220,10 +221,7 @@ def read_warc_docs(spark: SparkSession, path: str,
             yield pd.DataFrame({"doc_id": ids, "spans": spans},
                                columns=["doc_id", "spans"])
 
-    from ..shipping import ship_package
-
-    ship_package(spark)
-    return raw.mapInPandas(parse, schema=DOCS)
+    return boundary.map_in_pandas(raw, parse, DOCS)
 
 
 # ---------------------------------------------------------------------------

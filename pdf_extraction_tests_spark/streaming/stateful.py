@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from .. import boundary
+
 SPAN_EVENTS = T.StructType(
     [
         T.StructField("doc_id", T.StringType(), False),
@@ -130,10 +132,5 @@ def assemble_spans_stream(events: DataFrame,
     engine must keep scheduling timeout-evaluation micro-batches, so an
     available-now query would never terminate.
     """
-    return events.groupBy("doc_id").applyInPandasWithState(
-        _assemble,
-        outputStructType=ASSEMBLED,
-        stateStructType=_STATE,
-        outputMode="append",
-        timeoutConf=timeout,
-    )
+    return boundary.apply_in_pandas_with_state(
+        events, ["doc_id"], _assemble, ASSEMBLED, _STATE, "append", timeout)

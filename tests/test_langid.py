@@ -270,14 +270,11 @@ class TestEndToEndCorpus:
 
 
 def test_arrow_kernel_matches_expression_path(spark):
-    """Round-7: with_language_guess moved to an Arrow-vectorized kernel;
-    its guesses must be bit-identical to the all-JVM expression path the
-    DuckDB oracle mirrors — over real multilingual prose, the synthetic
-    corpus AND edge rows (NULL/empty/tie-shaped)."""
-    from pyspark.sql import functions as F
-
-    from pdf_extraction_tests_spark.operators.text_analysis import (
-        with_language_guess, with_language_guess_expr)
+    """with_language_guess (the Arrow kernel) must equal the DuckDB
+    expression oracle language_guess_sql row for row - over the synthetic
+    corpus AND edge rows (NULL/empty/whitespace/near-threshold/marker-char
+    ties)."""
+    import duckdb
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     edge = spark.createDataFrame(
@@ -286,8 +283,10 @@ def test_arrow_kernel_matches_expression_path(spark):
          (100005, "ß ß ß"), (100006, "añå")],  # marker-char ties
         "doc_id long, text string")
     both = docs.select("doc_id", "text").unionByName(edge)
-    a = {r.doc_id: r.lang_guess
-         for r in with_language_guess(both).select("doc_id", "lang_guess").collect()}
-    b = {r.doc_id: r.lang_guess
-         for r in with_language_guess_expr(both).select("doc_id", "lang_guess").collect()}
-    assert a == b
+    got = {r.doc_id: r.lang_guess
+           for r in TA.with_language_guess(both).select("doc_id", "lang_guess").collect()}
+    con = duckdb.connect()
+    con.register("documents", both.toPandas())
+    want = dict(con.execute(TA.language_guess_sql()).fetchall())
+    assert len(got) == both.count()
+    assert got == want

@@ -40,3 +40,20 @@ def test_no_driver_side_collect_loops():
             if ".collect()" in code and "bounded-sample ok" not in line:
                 offenders.append(f"{path.name}:{i}: {line.strip()}")
     assert not offenders, "driver-side collect in operators:\n" + "\n".join(offenders)
+
+
+BOUNDARY_RE = re.compile(
+    r"\b(mapInPandas|applyInPandas|applyInPandasWithState)\(|pandas_udf")
+
+
+def test_python_stages_only_in_the_boundary_module():
+    """Every Arrow-batched Python stage goes through boundary.py, which
+    ships the package and crosses spans flat; nothing else calls the
+    Spark entry points or ships the package by hand."""
+    offenders = []
+    for path in PKG.rglob("*.py"):
+        for i, line in enumerate(path.read_text().splitlines(), 1):
+            if ("ship_package" in line
+                    or (path.name != "boundary.py" and BOUNDARY_RE.search(line))):
+                offenders.append(f"{path.relative_to(PKG)}:{i}: {line.strip()}")
+    assert not offenders, "Python stage outside boundary.py:\n" + "\n".join(offenders)

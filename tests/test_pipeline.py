@@ -254,11 +254,13 @@ class TestDualExtractorStage:
         dual = {
             r.doc_id: (r.title_match, r.n_spans_smart, r.n_spans_simple,
                        r.main_len_ratio)
-            for r in pl.extract_docs_dual(df, num_parts=4).collect()
+            for r in pl.extract_docs_dual(df).collect()
         }
         smart = {r.doc_id: r for r in pl.extract_docs(df, num_parts=4).collect()}
+        # the simple extractor's local kernel is the second pipeline's oracle
         simple = {
-            r.doc_id: r for r in pl.extract_docs_simple(df, num_parts=4).collect()
+            r.doc_id: r
+            for r in ec.extract_simple_frame(pd.DataFrame(docs)).itertuples()
         }
         assert set(dual) == set(smart) == set(simple)
         for doc_id, got in dual.items():
